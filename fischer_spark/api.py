@@ -1083,7 +1083,7 @@ def query_raw(
     chunks). Per-query cost is O(chunks overlapping the window), never
     O(table): the t_start/t_end predicates reach the parquet scan of the
     chunk table (stats are plain columns, so Catalyst pushes them), and
-    the decode mapInPandas sees only surviving chunk rows.
+    the decode mapInArrow sees only surviving chunk rows.
     """
     return _raw_points(store, metric, start, end, domain, tag).orderBy(
         "domain", "tag", "bucket_ts"

@@ -24,8 +24,9 @@ gorilla-v1 (float64 values, bit-exact incl. NaN payloads and -0.0):
   (#meaningful stored minus 1 so 64 fits in 6 bits.)
 
 Encoders/decoders are sequential bit loops per chunk — chunks are
-bounded (≤ CHUNK_MAX points), and the Spark layer runs one chunk per
-grouped-Arrow batch, so the Python loop cost is O(chunk), embarrassingly
+bounded (≤ CHUNK_MAX points), and the Spark layer (operators/chunks.py)
+hands a whole Arrow batch of chunks to one Python call that runs one
+loop per chunk, so the Python loop cost is O(chunk), embarrassingly
 parallel across chunks.
 """
 

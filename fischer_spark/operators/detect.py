@@ -74,9 +74,12 @@ def zscore_window(
     # the frame per row — O(W·n) BigDecimal adds.  Instead take cumulative
     # (unbounded-preceding) sums, which Spark maintains incrementally, and
     # difference two lags: frame_sum[-w,-1] = cum@lag1 − cum@lag(w+1).
-    # Decimal addition is exact, so the subtraction reproduces the frame
-    # sum bit-for-bit while costing O(n).  ~5× faster detect stage at 20M
-    # points (measured in bench/scaling.py).
+    # Decimal addition is exact, but Spark types each difference one
+    # fractional digit narrower — decimal(38,17) for the decimal(38,18)
+    # sums, decimal(38,11) for the decimal(38,12) sums of squares — and
+    # rounds it half-up, so the result is the frame sum rounded to that
+    # scale (still deterministic across partition orders), at O(n) cost.
+    # ~5× faster detect stage at 20M points (measured in bench/scaling.py).
     cum_win = (
         Window.partitionBy(*KEY_COLS)
         .orderBy("bucket_ts")

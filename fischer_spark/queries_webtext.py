@@ -1804,7 +1804,7 @@ _ZIPF_TOPK = 100
 )
 def zipf_slope_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source Zipf slope (O136): OLS slope of log10(token freq) on
-    log10(rank) over each source's top {100} token ranks — natural
+    log10(rank) over each source's top ``_ZIPF_TOPK`` token ranks — natural
     language follows Zipf's law with slope near -1 (freq ~ rank^-1);
     a much flatter slope flags templated/boilerplate-heavy sources and
     a cliff flags tiny-vocabulary generated text, at the SOURCE level

@@ -92,6 +92,111 @@ def test_zone_map_pruning(pages):
     assert want.exceptAll(got).count() == 0
 
 
+_DAY_US = 86_400_000_000
+_T0_US = 1_704_067_200_000_000  # 2024-01-01 00:00:00 UTC
+
+
+def _points_df(spark, rows, ntz=False):
+    """(domain, metric, tag, unix micros, value) rows → series points
+    with an exact microsecond bucket_ts (TIMESTAMP or TIMESTAMP_NTZ)."""
+    df = spark.createDataFrame(
+        rows, "domain string, metric string, tag string, us long, value double"
+    )
+    ts = F.timestamp_micros("us")
+    return df.select(
+        "domain", "metric", "tag",
+        (ts.cast("timestamp_ntz") if ntz else ts).alias("bucket_ts"), "value",
+    )
+
+
+def _reference_chunks(rows):
+    """Plain-numpy chunk contract: one chunk per (key, UTC day), points
+    ordered by timestamp then the value's bit pattern, NULL read as NaN."""
+    import struct
+
+    def bits(v):
+        return struct.unpack("<Q", struct.pack("<d", v))[0]
+
+    groups = {}
+    for d, m, tag, us, v in rows:
+        v = float("nan") if v is None else v
+        groups.setdefault((d, m, tag, us // _DAY_US), []).append((us, bits(v), v))
+    out = {}
+    for (d, m, tag, _), pts in groups.items():
+        pts.sort(key=lambda p: (p[0], p[1]))
+        ts = np.array([p[0] for p in pts], dtype=np.int64)
+        vals = np.array([p[2] for p in pts], dtype=np.float64)
+        finite = [v for v in vals.tolist() if np.isfinite(v)]
+        out[(d, m, tag, int(ts[0]))] = (
+            int(ts[-1]), len(pts), encode_timestamps(ts), encode_values(vals),
+            min(finite) if finite else None, max(finite) if finite else None,
+        )
+    return out
+
+
+@pytest.mark.parametrize("ntz", [False, True])
+def test_spark_chunk_contract(spark, ntz):
+    """encode_chunks over 3 input partitions equals plain-numpy encoding
+    of each chunk's ordered points, byte for byte — NaN, ±inf, -0.0,
+    NULL (encoded as NaN), tied timestamps, a 1-point chunk and a chunk
+    without finite values; t_start/t_end are TIMESTAMP for either input
+    type, and the zone-map stats cover finite values only."""
+    from pyspark.sql import types as T
+
+    from fischer_spark.operators.chunks import encode_chunks
+
+    specials = [float("nan"), float("inf"), float("-inf"), -0.0, 0.0, None]
+    rows = [
+        ("a.example", "page_size", None, _T0_US + (i // 2) * 1_800_000_000,
+         specials[i // 4 % 6] if i % 4 == 0 else float(i % 7) - 3.5)
+        for i in range(200)
+    ]
+    rows.append(("b.example", "crawl_rate", None, _T0_US + 5 * _DAY_US + 7, 3.0))
+    no_finite = [float("nan"), None, float("inf")]
+    rows += [
+        ("c.example", "lang_mix", "en", _T0_US + k * 60_000_000, no_finite[k % 3])
+        for k in range(5)
+    ]
+    pts = _points_df(spark, rows, ntz).repartition(3)
+    assert pts.rdd.getNumPartitions() >= 3
+    chunks = encode_chunks(pts, "1d")
+    assert chunks.schema["t_start"].dataType == T.TimestampType()
+    assert chunks.schema["t_end"].dataType == T.TimestampType()
+    got = chunks.select(
+        "domain", "metric", "tag",
+        F.unix_micros("t_start").alias("t0"), F.unix_micros("t_end").alias("t1"),
+        "n", "ts_bytes", "val_bytes", "stat_min", "stat_max", "stat_cnt",
+        "ts_codec", "val_codec",
+    ).collect()
+    want = _reference_chunks(rows)
+    assert len(got) == len(want) == 5
+    for r in got:
+        t1, n, ts_b, val_b, lo, hi = want[(r.domain, r.metric, r.tag, r.t0)]
+        assert (r.t1, r.n, r.stat_cnt) == (t1, n, n)
+        assert bytes(r.ts_bytes) == ts_b and bytes(r.val_bytes) == val_b
+        assert (r.stat_min, r.stat_max) == (lo, hi)
+        assert (r.ts_codec, r.val_codec) == ("dod-v1", "gorilla-v1")
+
+
+def test_spark_chunk_bytes_independent_of_partitioning(spark):
+    """A series with tied timestamps encodes to the same bytes whatever
+    order the shuffle delivers its points in."""
+    from fischer_spark.operators.chunks import encode_chunks
+
+    rng = np.random.default_rng(7)
+    rows = [
+        ("a.example", "page_size", None, _T0_US + (i // 3) * 60_000_000, float(v))
+        for i, v in enumerate(rng.integers(1_000, 90_000, size=600))
+    ]
+    pts = _points_df(spark, rows)
+    cols = ["domain", "metric", "tag", "t_start", "ts_bytes", "val_bytes"]
+
+    def enc(df):
+        return sorted(tuple(r) for r in encode_chunks(df, "1d").select(cols).collect())
+
+    assert enc(pts.repartition(7)) == enc(pts.repartition(3, "value"))
+
+
 # -- hypothesis property coverage (SURVEY.md §5: property-based layer) ------
 
 from hypothesis import given, settings

@@ -625,3 +625,41 @@ def test_knn_purity_broadcast_probe_scan(spark):
     assert "BroadcastNestedLoopJoin" in p
     assert "CartesianProduct" not in p
     assert "ArrowEval" not in p and "BatchEvalPython" not in p
+
+
+def _chunk_points(spark):
+    import datetime as dt
+
+    from fischer_spark.schemas import SERIES_POINT_SCHEMA
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        ("a.example", "crawl_rate", None, t0 + dt.timedelta(hours=h), float(h))
+        for h in range(72)
+    ]
+    return spark.createDataFrame(rows, SERIES_POINT_SCHEMA)
+
+
+def test_encode_chunks_one_exchange_batch_arrow(spark):
+    """encode_chunks: ONE hash-aggregate shuffle on the chunk key, then
+    one MapInArrow encoding whole batches of chunks — never the
+    per-group pandas apply (FlatMapGroupsInPandas)."""
+    from fischer_spark.operators.chunks import encode_chunks
+
+    p = plan_of(encode_chunks(_chunk_points(spark), "1d"))
+    assert "FlatMapGroupsInPandas" not in p
+    assert p.count(") Exchange") == 1
+    assert "MapInArrow" in p
+    assert "MapInPandas" not in p and "ArrowEval" not in p
+
+
+def test_decode_chunks_no_exchange(spark):
+    """decode_chunks: a narrow per-batch MapInArrow — no shuffle."""
+    from fischer_spark.operators.chunks import decode_chunks, encode_chunks
+    from fischer_spark.schemas import CHUNK_SCHEMA
+
+    # a local chunk table, so the plan holds the decode alone
+    rows = encode_chunks(_chunk_points(spark), "1d").collect()
+    p = plan_of(decode_chunks(spark.createDataFrame(rows, CHUNK_SCHEMA)))
+    assert ") Exchange" not in p
+    assert "MapInArrow" in p
