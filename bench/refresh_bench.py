@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """VERDICT r2 next #9 — numeric proof of the incremental-refresh claim:
-refresh_cascade (O(touched buckets)) vs full tier recompute (O(history))
+refresh_cascade (O(delta span)) vs full tier recompute (O(history))
 on the same 160M-point store with a realistic late delta (one day of 1m
 data for 10% of keys, arriving after the day closed).
 
@@ -151,12 +151,12 @@ def main() -> None:
             "| path | wall (s) |",
             "|---|---|",
             f"| full cascade recompute (base+delta) | {r['t_full']:.1f} |",
-            f"| refresh_cascade (touched buckets only) | {r['t_refresh']:.1f} |",
+            f"| refresh_cascade (one span commit per tier) | {r['t_refresh']:.1f} |",
             "",
             f"**Speedup {r['speedup']:.1f}×**; refreshed tiers verified "
             "bit-identical to the full recompute "
             f"(exceptAll both ways = 0: {r['tiers_equal']}). The refresh cost "
-            "is O(delta + touched-bucket states) — it does not grow with "
+            "is O(delta + span states) — it does not grow with "
             "history, so the gap widens with table age (the full recompute "
             "side grows linearly).",
         ]) + "\n"

@@ -119,45 +119,21 @@ def refresh_hist_tier(
     table: str,
     tier: str,
     delta_hist: DataFrame,
-    max_runs: int = 64,
 ) -> str | None:
     """Incremental refresh of one histogram tier: merge a pre-binned
     delta (``hist_states`` over the late points, SAME (lo, hi, n_bins)
     as the stored tier — the caller validates against the persisted
-    params) into exactly the touched buckets by exact integer bin-count
-    addition. Same run-planner, span fallback, and O(touched) contract
-    as the rollup family's ``refresh_tier`` (ADVICE r2: a late-data
-    refresh that skips the hist tiers leaves query_range_hist serving
-    stale percentiles that silently disagree with query_range means).
-    Returns the last committed snapshot id, or None for an empty delta."""
+    params) by exact integer bin-count addition, in ONE
+    ``overwrite_range`` commit over the delta's bucket span — the same
+    span merge as the rollup family's ``refresh_tier`` (ADVICE r2: a
+    late-data refresh that skips the hist tiers leaves query_range_hist
+    serving stale percentiles that silently disagree with query_range
+    means). Returns the committed snapshot id, or None for an empty
+    delta."""
     from fischer_spark.operators.rollup import _overwrite_touched
 
     return _overwrite_touched(
-        store,
-        table,
-        delta_hist,
-        lambda df: hist_merge(df, tier),
-        tier_s={"1m": 60, "1h": 3600, "1d": 86400}[tier],
-        max_runs=max_runs,
-    )
-
-
-def refresh_hist_cascade(
-    store,
-    late_points: DataFrame,
-    lo: float,
-    hi: float,
-    n_bins: int,
-    tiers: tuple[str, ...] = ("1h", "1d"),
-    table_prefix: str = "hist_",
-) -> dict[str, str | None]:
-    """Late-data refresh across the materialized histogram tiers: the
-    late points are binned ONCE at the finest tier; coarser deltas derive
-    by exact integer merge (never re-binning), mirroring the build-time
-    cascade. Single-param form: every late point binned with one
-    (lo, hi, n_bins). Returns {tier: snapshot_id-or-None}."""
-    return _refresh_hist_delta(
-        store, hist_states(late_points, tiers[0], lo, hi, n_bins), tiers, table_prefix
+        store, table, tier, delta_hist, lambda df: hist_merge(df, tier)
     )
 
 
@@ -169,23 +145,15 @@ def refresh_hist_cascade_families(
     tiers: tuple[str, ...] = ("1h", "1d"),
     table_prefix: str = "hist_",
 ) -> dict[str, str | None]:
-    """Multi-family late-data refresh: the union delta (each family binned
-    with its own params, matching the build) merges in ONE refresh pass
-    per tier — the touched-bucket overwrite re-aggregates every family's
-    rows in those buckets, so families not present in the delta ride
-    through unchanged (state addition with an empty delta is identity)."""
-    return _refresh_hist_delta(
-        store,
-        hist_states_families(late_points, tiers[0], params_by_metric, key_dim),
-        tiers,
-        table_prefix,
-    )
-
-
-def _refresh_hist_delta(
-    store, delta: DataFrame, tiers: tuple[str, ...], table_prefix: str
-) -> dict[str, str | None]:
-    delta = delta.persist()
+    """Late-data refresh across the materialized histogram tiers: the
+    late points are binned ONCE at the finest tier (each family with its
+    own params, matching the build); coarser deltas derive by exact
+    integer merge (never re-binning), mirroring the build-time cascade.
+    The union delta merges in ONE commit per tier — the span overwrite
+    re-aggregates every family's rows in the span, so families not
+    present in the delta ride through unchanged (state addition with an
+    empty delta is identity). Returns {tier: snapshot_id-or-None}."""
+    delta = hist_states_families(late_points, tiers[0], params_by_metric, key_dim).persist()
     try:
         out = {tiers[0]: refresh_hist_tier(store, f"{table_prefix}{tiers[0]}", tiers[0], delta)}
         prev = delta

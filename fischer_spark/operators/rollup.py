@@ -20,10 +20,12 @@ Scale notes:
 
 from __future__ import annotations
 
+import datetime
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from fischer_spark.functions.time import bucketize, is_ntz
+from fischer_spark.functions.time import TIER_STEP_US, bucketize, is_ntz
 
 KEY_COLS = ["domain", "metric", "tag"]
 STATE_COLS = ["cnt", "sum", "sum_sq", "min", "max"]
@@ -268,112 +270,50 @@ def refresh_tier(
     tier: str,
     new_points: DataFrame,
     impl: str = "decimal",
-    max_runs: int = 64,
 ) -> str | None:
-    """Incremental continuous-aggregate refresh: roll up ONLY the tier
-    buckets touched by ``new_points`` and overwrite exactly those buckets
-    in ``table``. Untouched buckets are never rewritten — the touched
-    buckets are grouped into contiguous runs and each run gets one
-    idempotent ``overwrite_range`` commit, so a sparse delta (one late
-    point + one current point) rewrites two buckets, not the span
-    between them (O(touched), not O(span)).
-
-    ``max_runs`` bounds the commit count: a delta SCATTERED across the
-    timeline (a backfill, not a late-window trickle) can fragment into
-    thousands of runs, and one Spark write job per run is far worse than
-    one span rewrite (measured: a full-range 1m refresh degenerated to
-    ~10³ tiny commits). Past the cap the refresh falls back to a single
-    span overwrite [min, max) whose merge carries the untouched
-    in-between buckets through unchanged — O(span) rows but O(1)
-    commits, the right trade exactly when touched ≈ span.
+    """Incremental continuous-aggregate refresh: roll up ``new_points``
+    to ``tier`` and merge the delta into ``table`` with ONE
+    ``overwrite_range`` commit over the delta's bucket span
+    [min, max + tier).  Untouched buckets inside the span are rewritten
+    unchanged (state addition with an empty delta is the identity), so a
+    sparse delta (one late point + one current point) costs O(span)
+    rows but always exactly one write and one snapshot per tier.
 
     The delta is MERGED onto existing states by exact state addition
     (``rollup_states`` over the union — associative in both impls), so
-    a refresh is O(delta + touched-bucket states), never O(history).
+    a refresh is O(delta + span states), never O(history).
     Requires ``new_points`` to be strictly new (exactly-once ingest);
     with at-least-once input, re-rollup the affected range from the raw
     series store instead of merging.
 
-    The distinct touched-bucket set is collected to the driver to plan
-    the runs — bounded by delta-span/tier (a day of late 1m data is
-    1 440 values), never by delta row count or history size.
-
-    Returns the last committed snapshot id, or None for an empty delta.
+    Returns the committed snapshot id, or None for an empty delta.
     """
     return _overwrite_touched(
-        store,
-        table,
-        rollup_points(new_points, tier, impl),
+        store, table, tier, rollup_points(new_points, tier, impl),
         lambda df: rollup_states(df, tier),
-        tier_s={"1m": 60, "1h": 3600, "1d": 86400}[tier],
-        max_runs=max_runs,
     )
 
 
-def _overwrite_touched(store, table, delta, merge, tier_s, max_runs) -> str | None:
-    """Shared touched-bucket run-planner for incremental refresh (rollup
-    AND hist tier families): group the delta's distinct tier buckets into
-    contiguous runs, merge the delta onto existing rows of exactly those
-    buckets via ``merge`` (exact state addition — associative), commit one
-    idempotent ``overwrite_range`` per run, span-fallback past
-    ``max_runs``.  See ``refresh_tier`` for the full contract."""
-    import datetime
-
+def _overwrite_touched(store, table, tier, delta, merge) -> str | None:
+    """Shared span merge for incremental refresh (rollup AND hist tier
+    families): read the existing rows of the delta's bucket span, merge
+    them with the delta via ``merge`` (exact state addition), commit one
+    ``overwrite_range``.  See ``refresh_tier`` for the full contract."""
     delta = delta.persist()
-    touched = sorted(
-        r[0] for r in delta.select("bucket_ts").distinct().collect()
-    )
-    if not touched:
-        delta.unpersist()
-        return None
-    # contiguous runs of tier buckets: [lo, hi_excl) half-open each
-    step = datetime.timedelta(seconds=tier_s)
-    runs: list[tuple] = []
-    lo = prev = touched[0]
-    for b in touched[1:]:
-        if b - prev != step:
-            runs.append((lo, prev + step))
-            lo = b
-        prev = b
-    runs.append((lo, prev + step))
-
-    if len(runs) > max_runs:
-        # scattered backfill: one span commit; untouched buckets inside
-        # the span ride through the merge unchanged (state addition with
-        # an empty delta is the identity)
-        span_lo, span_hi = touched[0], touched[-1] + step
+    try:
+        lo, hi = delta.agg(F.min("bucket_ts"), F.max("bucket_ts")).first()
+        if lo is None:
+            return None
+        hi += datetime.timedelta(microseconds=TIER_STEP_US[tier])
+        # a plain range predicate Catalyst pushes into the parquet scan
         existing = store.read(table).filter(
-            (F.col("bucket_ts") >= F.lit(span_lo)) & (F.col("bucket_ts") < F.lit(span_hi))
+            (F.col("bucket_ts") >= F.lit(lo)) & (F.col("bucket_ts") < F.lit(hi))
         )
-        merged = merge(existing.unionByName(delta))
-        snap = store.overwrite_range(
-            table, merged, "bucket_ts", str(span_lo), str(span_hi)
+        return store.overwrite_range(
+            table, merge(existing.unionByName(delta)), "bucket_ts", str(lo), str(hi)
         )
+    finally:
         delta.unpersist()
-        return snap
-
-    # span range-filter FIRST (a plain predicate Catalyst pushes into the
-    # parquet scan, pruning row groups outside [min, max) of the touched
-    # buckets — a day's delta against a month's tier reads ~1/30th), then
-    # the broadcast semi-join exact-filters to the touched buckets inside
-    # the span
-    existing = store.read(table).filter(
-        (F.col("bucket_ts") >= F.lit(touched[0]))
-        & (F.col("bucket_ts") < F.lit(touched[-1] + step))
-    ).join(
-        F.broadcast(delta.select("bucket_ts").distinct()), "bucket_ts", "left_semi"
-    )
-    merged = merge(existing.unionByName(delta)).persist()
-    merged.count()
-    snap = None
-    for run_lo, run_hi in runs:
-        part = merged.filter(
-            (F.col("bucket_ts") >= F.lit(run_lo)) & (F.col("bucket_ts") < F.lit(run_hi))
-        )
-        snap = store.overwrite_range(table, part, "bucket_ts", str(run_lo), str(run_hi))
-    merged.unpersist()
-    delta.unpersist()
-    return snap
 
 
 def refresh_cascade(
@@ -384,10 +324,11 @@ def refresh_cascade(
     table_prefix: str = "rollup_",
 ) -> dict[str, str | None]:
     """Late-data refresh across ALL materialized tiers: each tier merges
-    the same delta by exact state addition over its own touched buckets
-    (associativity makes per-tier merges equal a full recompute — the
-    continuous-aggregate invalidation story). Cost is O(tiers × delta),
-    never O(history). Returns {tier: snapshot_id-or-None}."""
+    the same delta by exact state addition over its own bucket span, one
+    commit per tier (associativity makes per-tier merges equal a full
+    recompute — the continuous-aggregate invalidation story). Cost is
+    O(tiers × (delta + span)), never O(history). Returns
+    {tier: snapshot_id-or-None}."""
     new_points = new_points.persist()
     try:
         return {

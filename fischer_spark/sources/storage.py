@@ -1,23 +1,17 @@
 """O4/O5/O6 — tier storage with snapshot manifests, retention, resume.
 
-BASELINE.json mandates Iceberg tables with snapshot checkpoints.  This
-sandbox has no iceberg-spark-runtime jar and no network (verified,
-SURVEY.md §1.1), so the engine is written against this thin store
-interface with TWO backends:
-
-- `ParquetManifestStore` (implemented): plain parquet snapshot dirs +
-  a JSON manifest emulating the Iceberg surface the engine needs —
-  snapshot ids, `VERSION AS OF`-style reads, append / overwrite-range /
-  delete-below commits, crash-safe manifest swap via temp+rename.
-  A commit mirrors Iceberg's delete+append semantics: readers fold the
-  snapshot chain (appends union in; overwrite/delete ops mask earlier
-  rows) — O(#snapshots) plan nodes, fine for per-stage checkpoints.
-- `IcebergStore` (stub): the same four methods over
-  `spark.read.format("iceberg")` / `df.writeTo(...)` — drop-in once the
-  runtime jar exists; raises ImportError here.
+BASELINE.json mandates Iceberg tables with snapshot checkpoints.  No
+iceberg-spark-runtime jar is available (SURVEY.md §1.1), so
+`ParquetManifestStore` emulates the Iceberg surface the engine needs over
+plain parquet snapshot dirs + a JSON manifest — snapshot ids,
+`VERSION AS OF`-style reads, append / overwrite-range / delete-below
+commits, crash-safe manifest swap via temp+rename.  A commit mirrors
+Iceberg's delete+append semantics: readers fold the snapshot chain
+(appends union in; overwrite/delete ops mask earlier rows) —
+O(#snapshots) plan nodes, fine for per-stage checkpoints.
 
 Engine code never touches paths directly — everything goes through the
-store, so swapping backends is a constructor change.
+store.
 """
 
 from __future__ import annotations
@@ -237,16 +231,18 @@ class ParquetManifestStore:
         """Rewrite the folded view as a single fresh append chain (the
         manifest analogue of Iceberg rewrite_data_files + expire_snapshots).
         The partition spec survives: if any commit in the chain was
-        day-partitioned, the compacted snapshot is too."""
+        day-partitioned, the compacted snapshot is too.
+
+        The fold covers the chain up to the snapshot that was current when
+        compaction started; snapshots committed while it ran are kept, in
+        order, after the compacted one."""
+        m = self._manifest(table)
+        base = m["current"]
         day_col = next(
-            (
-                e.get("day_col")
-                for e in reversed(self._manifest(table)["snapshots"])
-                if e.get("day_col")
-            ),
+            (e.get("day_col") for e in reversed(m["snapshots"]) if e.get("day_col")),
             None,
         )
-        df = self.read(table).cache()
+        df = self.read(table, snapshot_id=base).cache()
         df.count()
         snap = f"compact-{int(time.time() * 1000):x}-{uuid.uuid4().hex[:8]}"
         path = os.path.join(self.root, table, "snapshots", snap)
@@ -261,24 +257,17 @@ class ParquetManifestStore:
             entry["day_col"] = day_col
         else:
             df.write.mode("errorifexists").parquet(path)
+        m = self._manifest(table)
+        ids = [e["snapshot_id"] for e in m["snapshots"]]
+        later = m["snapshots"][ids.index(base) + 1 :]
+        if later:
+            later[0]["parent"] = snap
         m = {
-            "snapshots": [entry],
-            "current": snap,
+            "snapshots": [entry, *later],
+            "current": m["current"] if later else snap,
             # table properties survive compaction (Iceberg semantics)
-            "meta": self._manifest(table).get("meta", {}),
+            "meta": m.get("meta", {}),
         }
         _atomic_write_json(self._manifest_path(table), m)
         df.unpersist()
         return snap
-
-
-class IcebergStore:  # pragma: no cover - no jar in sandbox
-    """Iceberg backend stub: same surface over df.writeTo()/time-travel.
-    Requires iceberg-spark-runtime on the classpath (unavailable here —
-    SURVEY.md §1.1); constructor fails fast with the reason."""
-
-    def __init__(self, spark: SparkSession, catalog: str):
-        raise ImportError(
-            "iceberg-spark-runtime jar not available in this sandbox; "
-            "use ParquetManifestStore (same interface)"
-        )

@@ -91,7 +91,7 @@ def main(argv: list[str] | None = None) -> int:
         action="store_true",
         help="incremental mode: treat the input as LATE/NEW pages only and "
         "merge them into the existing tier tables by exact state addition "
-        "(refresh_cascade — O(tiers x delta), touched buckets only) instead "
+        "(refresh_cascade — one span commit per tier) instead "
         "of running the full pipeline",
     )
     ap.add_argument(

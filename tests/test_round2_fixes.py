@@ -2,7 +2,8 @@
 
 - query_range rejects steps no tier divides; serves key-encoded stores
   from the persisted key_dim table WITHOUT scanning the series table.
-- refresh_tier rewrites only the touched buckets of a sparse delta.
+- refresh_tier merges a sparse delta in one span commit that keeps the
+  untouched buckets inside the span.
 - store.maybe_compact folds long snapshot chains on a policy.
 - sessionize is deterministic under duplicate (user_id, ts) rows.
 - lang-ID predicts zh/ja/ko from CJK script classes.
@@ -92,10 +93,10 @@ def test_query_range_clear_error_when_no_dim(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# refresh_tier: O(touched), not O(span)
+# refresh_tier: one span commit per tier
 # ---------------------------------------------------------------------------
 
-def test_refresh_tier_sparse_delta_rewrites_only_touched_buckets(spark, tmp_path):
+def test_refresh_tier_sparse_delta_one_span_commit(spark, tmp_path):
     from fischer_spark.operators.rollup import refresh_tier, rollup_points
 
     base = datetime.datetime(2024, 1, 1)
@@ -109,17 +110,16 @@ def test_refresh_tier_sparse_delta_rewrites_only_touched_buckets(spark, tmp_path
     store.append("rollup_1h", rollup_points(history, "1h"))
     before = {r["bucket_ts"]: r.asDict() for r in store.read("rollup_1h").collect()}
 
-    # sparse delta: one late point in hour 0 and one in hour 5 — hours 1-4
-    # must be untouched (not rewritten, not lost)
+    # sparse delta: one late point in hour 0 and one in hour 5 — one commit
+    # over the span [00:00, 06:00) whose merge keeps hours 1-4 unchanged
     delta = spark.createDataFrame([pt(0, 30, 3.0), pt(5, 30, 7.0)], schema)
     refresh_tier(store, "rollup_1h", "1h", delta)
 
     snaps = store.snapshots("rollup_1h")
     ow = [s for s in snaps if s["op"] == "overwrite_range"]
-    assert len(ow) == 2, "sparse delta must commit one overwrite per contiguous run"
-    spans = sorted((s["lo"], s["hi"]) for s in ow)
-    assert spans[0][0].startswith("2024-01-01 00:00") and spans[0][1].startswith("2024-01-01 01:00")
-    assert spans[1][0].startswith("2024-01-01 05:00") and spans[1][1].startswith("2024-01-01 06:00")
+    assert len(ow) == 1, "a refresh must commit one overwrite per tier"
+    assert ow[0]["lo"].startswith("2024-01-01 00:00")
+    assert ow[0]["hi"].startswith("2024-01-01 06:00")
 
     after = {r["bucket_ts"]: r.asDict() for r in store.read("rollup_1h").collect()}
     assert set(after) == set(before)
@@ -383,8 +383,8 @@ def test_refresh_cascade_equals_full_recompute(spark, tmp_path, impl):
 
 
 def test_refresh_tier_scattered_delta_span_fallback(spark, tmp_path):
-    """A delta fragmented into more contiguous runs than max_runs falls
-    back to ONE span commit whose merge still equals a full recompute."""
+    """A delta fragmented into many isolated buckets still commits ONE
+    span overwrite whose merge equals a full recompute."""
     from fischer_spark.operators.rollup import refresh_tier, rollup_points
     from tests.conftest import assert_df_equal
 
@@ -398,9 +398,9 @@ def test_refresh_tier_scattered_delta_span_fallback(spark, tmp_path):
     store = ParquetManifestStore(spark, str(tmp_path / "w"))
     store.append("rollup_1m", rollup_points(history, "1m"))
 
-    # every 4th minute touched → 50 isolated runs > max_runs=8
+    # every 4th minute touched → 50 isolated buckets
     late = spark.createDataFrame([pt(m, 5.0) for m in range(0, 200, 4)], schema)
-    refresh_tier(store, "rollup_1m", "1m", late, max_runs=8)
+    refresh_tier(store, "rollup_1m", "1m", late)
 
     ow = [s for s in store.snapshots("rollup_1m") if s["op"] == "overwrite_range"]
     assert len(ow) == 1  # single span commit, not 50

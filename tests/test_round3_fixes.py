@@ -5,7 +5,7 @@
 - hist binning params are persisted as table meta and validated at
   read time (a mismatch reinterprets stored bin indices);
 - the hist tier family refreshes with late data in lockstep with the
-  rollup tiers (refresh_hist_cascade == full recompute, bit-exact);
+  rollup tiers (refresh_hist_cascade_families == full recompute, bit-exact);
 - --refresh --encode-keys appends newly seen series keys to key_dim;
 - --refresh fails loudly on key-encoding mismatch vs the stored tiers.
 """
@@ -161,7 +161,7 @@ def test_refresh_hist_cascade_equals_recompute(spark, tmp_path):
     from fischer_spark.operators.histogram import (
         hist_merge,
         hist_states,
-        refresh_hist_cascade,
+        refresh_hist_cascade_families,
     )
     from fischer_spark.sources.storage import ParquetManifestStore
     from tests.conftest import assert_df_equal
@@ -184,7 +184,7 @@ def test_refresh_hist_cascade_equals_recompute(spark, tmp_path):
     store.append("hist_1h", h1)
     store.append("hist_1d", hist_merge(store.read("hist_1h"), "1d"))
 
-    snaps = refresh_hist_cascade(store, _pts(spark, late_rows), LO, HI, BINS)
+    snaps = refresh_hist_cascade_families(store, _pts(spark, late_rows), {"m": (LO, HI, BINS)})
     assert snaps["1h"] is not None and snaps["1d"] is not None
 
     full = _pts(spark, base_rows + late_rows)
@@ -195,14 +195,14 @@ def test_refresh_hist_cascade_equals_recompute(spark, tmp_path):
 
 
 def test_refresh_hist_empty_delta_noop(spark, tmp_path):
-    from fischer_spark.operators.histogram import hist_states, refresh_hist_cascade
+    from fischer_spark.operators.histogram import hist_states, refresh_hist_cascade_families
     from fischer_spark.sources.storage import ParquetManifestStore
 
     store = ParquetManifestStore(spark, str(tmp_path / "wh"))
     rows = [("d", "m", None, datetime.datetime(2024, 1, 1), 5.0)]
     store.append("hist_1h", hist_states(_pts(spark, rows), "1h", LO, HI, BINS))
     store.append("hist_1d", hist_states(_pts(spark, rows), "1d", LO, HI, BINS))
-    snaps = refresh_hist_cascade(store, _pts(spark, []).limit(0), LO, HI, BINS)
+    snaps = refresh_hist_cascade_families(store, _pts(spark, []).limit(0), {"m": (LO, HI, BINS)})
     assert snaps == {"1h": None, "1d": None}
 
 

@@ -120,3 +120,26 @@ def test_compact_preserves_partition_spec(spark, store):
     assert store.read("t").count() == 2
     # pruning still works after compaction
     assert store.read("t", t_from="2024-01-02 00:00:00").count() == 1
+
+
+def test_compact_keeps_commit_racing_the_fold(spark, store):
+    """A snapshot committed while compaction folds the chain survives the
+    manifest swap, after the compacted snapshot."""
+    store.append("t", _pts(spark, [("a", 1, 0, 1.0)]))
+    store.append("t", _pts(spark, [("b", 1, 0, 2.0)]))
+    fold = store.read
+
+    def read_then_commit(table, *args, **kwargs):
+        df = fold(table, *args, **kwargs)
+        store.append(table, _pts(spark, [("c", 2, 0, 3.0)]))
+        return df
+
+    store.read = read_then_commit
+    snap = store.compact("t")
+    del store.read
+
+    ids = [e["snapshot_id"] for e in store.snapshots("t")]
+    assert len(ids) == 2 and ids[0] == snap
+    assert store.current_snapshot("t") == ids[1]
+    got = sorted((r.domain, r.value) for r in store.read("t").collect())
+    assert got == [("a", 1.0), ("b", 2.0), ("c", 3.0)]
