@@ -298,8 +298,12 @@ def _overwrite_touched(store, table, tier, delta, merge) -> str | None:
     """Shared span merge for incremental refresh (rollup AND hist tier
     families): read the existing rows of the delta's bucket span, merge
     them with the delta via ``merge`` (exact state addition), commit one
-    ``overwrite_range``.  See ``refresh_tier`` for the full contract."""
-    delta = delta.persist()
+    ``overwrite_range``.  See ``refresh_tier`` for the full contract.
+    A caller's cached ``delta`` stays cached: only a cache made here is
+    dropped here."""
+    owned = not delta.is_cached
+    if owned:
+        delta = delta.persist()
     try:
         lo, hi = delta.agg(F.min("bucket_ts"), F.max("bucket_ts")).first()
         if lo is None:
@@ -313,7 +317,8 @@ def _overwrite_touched(store, table, tier, delta, merge) -> str | None:
             table, merge(existing.unionByName(delta)), "bucket_ts", str(lo), str(hi)
         )
     finally:
-        delta.unpersist()
+        if owned:
+            delta.unpersist()
 
 
 def refresh_cascade(

@@ -5,10 +5,17 @@ iceberg-spark-runtime jar is available (SURVEY.md §1.1), so
 `ParquetManifestStore` emulates the Iceberg surface the engine needs over
 plain parquet snapshot dirs + a JSON manifest — snapshot ids,
 `VERSION AS OF`-style reads, append / overwrite-range / delete-below
-commits, crash-safe manifest swap via temp+rename.  A commit mirrors
-Iceberg's delete+append semantics: readers fold the snapshot chain
-(appends union in; overwrite/delete ops mask earlier rows) —
-O(#snapshots) plan nodes, fine for per-stage checkpoints.
+commits, crash-safe manifest swap via temp+rename under an exclusive
+`flock` on `<table>/manifest.lock` (two writers never both commit on
+the same parent).  A commit mirrors Iceberg's delete+append semantics:
+readers fold the snapshot chain (appends union in; overwrite/delete ops
+mask earlier rows) — O(#snapshots) plan nodes, fine for per-stage
+checkpoints.
+
+As in Iceberg table metadata, each snapshot's manifest entry carries
+the schema it was written with, and reads load every snapshot with that
+schema: building a read starts no Spark job (no per-snapshot footer
+scan to infer a schema the store already knew).
 
 Engine code never touches paths directly — everything goes through the
 store.
@@ -16,6 +23,8 @@ store.
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import json
 import os
 import tempfile
@@ -26,6 +35,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from fischer_spark.schemas import TIER_RETENTION_S
 
@@ -40,6 +50,20 @@ def _atomic_write_json(path: str, obj: Any) -> None:
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, path)
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field, element and value nullable — the schema a
+    parquet read returns, whatever the written frame declared."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
 
 
 @dataclass
@@ -57,7 +81,40 @@ class ParquetManifestStore:
                 return json.load(f)
         return {"snapshots": [], "current": None}
 
+    @contextlib.contextmanager
+    def _updating(self, table: str):
+        """Read-modify-write of the manifest under an exclusive ``flock``
+        on ``<table>/manifest.lock``: yields the manifest, swaps in the
+        edited one on a clean exit.  ``flock`` (not ``lockf``) so two
+        threads of one process that open the lock file separately
+        exclude each other too."""
+        d = os.path.join(self.root, table)
+        os.makedirs(d, exist_ok=True)
+        with open(os.path.join(d, "manifest.lock"), "a") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            m = self._manifest(table)
+            yield m
+            _atomic_write_json(self._manifest_path(table), m)
+
     # -- commits ----------------------------------------------------------
+
+    def _write_snapshot(
+        self, table: str, snap_id: str, df: DataFrame, day_col: str | None
+    ) -> dict:
+        """Write ``df`` as snapshot ``snap_id``; returns the manifest entry's
+        ``path``, ``schema`` (what ``read`` loads it with) and ``day_col``."""
+        path = os.path.join(self.root, table, "snapshots", snap_id)
+        entry = {"path": path, "schema": _nullable(df.schema).jsonValue()}
+        writer = df.write
+        if day_col is not None:
+            # the sandbox analogue of Iceberg hidden partitioning on
+            # days(ts): the derived day is a directory key, never a
+            # data column (read() strips it), and time-ranged reads
+            # prune whole directories before any row is touched
+            writer = df.withColumn("_day", F.to_date(F.col(day_col))).write.partitionBy("_day")
+            entry["day_col"] = day_col
+        writer.mode("errorifexists").parquet(path)
+        return entry
 
     def _commit(
         self,
@@ -70,27 +127,11 @@ class ParquetManifestStore:
         snap_id = f"{int(time.time() * 1000):x}-{uuid.uuid4().hex[:8]}"
         entry = {"snapshot_id": snap_id, "op": op, **meta}
         if df is not None:
-            path = os.path.join(self.root, table, "snapshots", snap_id)
-            if day_col is not None:
-                # the sandbox analogue of Iceberg hidden partitioning on
-                # days(ts): the derived day is a directory key, never a
-                # data column (read() strips it), and time-ranged reads
-                # prune whole directories before any row is touched
-                (
-                    df.withColumn("_day", F.to_date(F.col(day_col)))
-                    .write.mode("errorifexists")
-                    .partitionBy("_day")
-                    .parquet(path)
-                )
-                entry["day_col"] = day_col
-            else:
-                df.write.mode("errorifexists").parquet(path)
-            entry["path"] = path
-        m = self._manifest(table)
-        entry["parent"] = m["current"]
-        m["snapshots"].append(entry)
-        m["current"] = snap_id
-        _atomic_write_json(self._manifest_path(table), m)
+            entry.update(self._write_snapshot(table, snap_id, df, day_col))
+        with self._updating(table) as m:
+            entry["parent"] = m["current"]
+            m["snapshots"].append(entry)
+            m["current"] = snap_id
         return snap_id
 
     def append(self, table: str, df: DataFrame, day_col: str | None = None) -> str:
@@ -129,7 +170,9 @@ class ParquetManifestStore:
         t_to: str | None = None,
     ) -> DataFrame:
         """Fold the snapshot chain up to `snapshot_id` (default current) —
-        the manifest replay of Iceberg's `VERSION AS OF`.
+        the manifest replay of Iceberg's `VERSION AS OF`.  Every snapshot
+        loads with the schema its manifest entry records, so building the
+        read starts no Spark job; an entry without one raises ValueError.
 
         ``t_from``/``t_to`` (timestamp strings) enable PARTITION PRUNING
         on day-partitioned snapshots: a conservative whole-day bound —
@@ -149,7 +192,11 @@ class ParquetManifestStore:
         else:
             raise ValueError(f"snapshot {target!r} not found in {table!r}")
         def _load(e: dict) -> DataFrame:
-            part = self.spark.read.parquet(e["path"])
+            if "schema" not in e:
+                raise ValueError(
+                    f"snapshot {e['snapshot_id']!r} of {table!r} has no schema in the manifest"
+                )
+            part = self.spark.read.schema(StructType.fromJson(e["schema"])).parquet(e["path"])
             if "_day" in part.columns:
                 if t_from is not None:
                     part = part.filter(F.col("_day") >= F.to_date(F.lit(t_from)))
@@ -190,9 +237,8 @@ class ParquetManifestStore:
         Iceberg table properties). Used to persist build parameters a read
         path must agree with — e.g. the histogram tiers' (lo, hi, n_bins),
         which reinterpret stored bin indices if they drift (ADVICE r2)."""
-        m = self._manifest(table)
-        m.setdefault("meta", {}).update(kv)
-        _atomic_write_json(self._manifest_path(table), m)
+        with self._updating(table) as m:
+            m.setdefault("meta", {}).update(kv)
 
     def meta(self, table: str) -> dict:
         return self._manifest(table).get("meta", {})
@@ -235,7 +281,8 @@ class ParquetManifestStore:
 
         The fold covers the chain up to the snapshot that was current when
         compaction started; snapshots committed while it ran are kept, in
-        order, after the compacted one."""
+        order, after the compacted one (the re-read and swap hold the
+        manifest lock, so no commit lands between them)."""
         m = self._manifest(table)
         base = m["current"]
         day_col = next(
@@ -245,29 +292,16 @@ class ParquetManifestStore:
         df = self.read(table, snapshot_id=base).cache()
         df.count()
         snap = f"compact-{int(time.time() * 1000):x}-{uuid.uuid4().hex[:8]}"
-        path = os.path.join(self.root, table, "snapshots", snap)
-        entry = {"snapshot_id": snap, "op": "append", "path": path, "parent": None}
-        if day_col is not None:
-            (
-                df.withColumn("_day", F.to_date(F.col(day_col)))
-                .write.mode("errorifexists")
-                .partitionBy("_day")
-                .parquet(path)
-            )
-            entry["day_col"] = day_col
-        else:
-            df.write.mode("errorifexists").parquet(path)
-        m = self._manifest(table)
-        ids = [e["snapshot_id"] for e in m["snapshots"]]
-        later = m["snapshots"][ids.index(base) + 1 :]
-        if later:
-            later[0]["parent"] = snap
-        m = {
-            "snapshots": [entry, *later],
-            "current": m["current"] if later else snap,
-            # table properties survive compaction (Iceberg semantics)
-            "meta": m.get("meta", {}),
-        }
-        _atomic_write_json(self._manifest_path(table), m)
+        entry = {"snapshot_id": snap, "op": "append", "parent": None}
+        entry.update(self._write_snapshot(table, snap, df, day_col))
+        with self._updating(table) as m:
+            # table properties (meta) survive compaction (Iceberg semantics)
+            ids = [e["snapshot_id"] for e in m["snapshots"]]
+            later = m["snapshots"][ids.index(base) + 1 :]
+            if later:
+                later[0]["parent"] = snap
+            m["snapshots"] = [entry, *later]
+            if not later:
+                m["current"] = snap
         df.unpersist()
         return snap

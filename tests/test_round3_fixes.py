@@ -206,6 +206,24 @@ def test_refresh_hist_empty_delta_noop(spark, tmp_path):
     assert snaps == {"1h": None, "1d": None}
 
 
+def test_refresh_hist_tier_keeps_callers_cache(spark, tmp_path):
+    """A delta the caller persisted stays cached after the refresh, so
+    the cascade's next tier merges it instead of binning the late points
+    again."""
+    from fischer_spark.operators.histogram import hist_states, refresh_hist_tier
+    from fischer_spark.sources.storage import ParquetManifestStore
+
+    store = ParquetManifestStore(spark, str(tmp_path / "wh"))
+    rows = [("d", "m", None, datetime.datetime(2024, 1, 1), 5.0)]
+    store.append("hist_1h", hist_states(_pts(spark, rows), "1h", LO, HI, BINS))
+    delta = hist_states(_pts(spark, rows), "1h", LO, HI, BINS).persist()
+    try:
+        assert refresh_hist_tier(store, "hist_1h", "1h", delta) is not None
+        assert delta.is_cached
+    finally:
+        delta.unpersist()
+
+
 # --------------------------------------------------------------------------
 # job CLI: --refresh with hist tiers + key_dim growth + mismatch guard
 # --------------------------------------------------------------------------

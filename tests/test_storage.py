@@ -3,9 +3,14 @@ overwrite-range idempotency, retention, compaction."""
 
 from __future__ import annotations
 
+import json
+import sys
+import threading
 from datetime import datetime
+from decimal import Decimal
 
 import pytest
+from pyspark.sql import DataFrameReader
 from pyspark.sql import functions as F
 
 from fischer_spark.sources.storage import ParquetManifestStore
@@ -143,3 +148,130 @@ def test_compact_keeps_commit_racing_the_fold(spark, store):
     assert store.current_snapshot("t") == ids[1]
     got = sorted((r.domain, r.value) for r in store.read("t").collect())
     assert got == [("a", 1.0), ("b", 2.0), ("c", 3.0)]
+
+
+def _typed(spark, keys_days):
+    """NTZ and zoned timestamps, a decimal(38,18), binary and a NULL."""
+    return spark.createDataFrame(
+        [
+            (k, datetime(2024, 1, d, 6), datetime(2024, 1, d, 7),
+             Decimal(f"{d}.000000000000000001"), k.encode(), None if d % 2 else k)
+            for k, d in keys_days
+        ],
+        "key string, bucket_ts timestamp_ntz, tz timestamp, "
+        "amount decimal(38,18), blob binary, note string",
+    )
+
+
+def _commit_shape(spark, store, shape):
+    first = _typed(spark, [("a", 1), ("b", 2), ("c", 3)])
+    later = _typed(spark, [("d", 2), ("e", 4)])
+    day2 = ("2024-01-02 00:00:00", "2024-01-03 00:00:00")
+    if shape == "append":
+        store.append("t", first)
+    elif shape == "partitioned_append":
+        store.append("t", first, day_col="bucket_ts")
+    elif shape == "overwrite_range":
+        store.append("t", first)
+        store.overwrite_range("t", later.filter("key = 'd'"), "bucket_ts", *day2)
+    elif shape == "delete_below":
+        store.append("t", first)
+        store.delete_below("t", "bucket_ts", day2[0])
+    elif shape == "compacted":
+        store.append("t", first, day_col="bucket_ts")
+        store.append("t", later)
+        store.delete_below("t", "bucket_ts", day2[0])
+        store.compact("t")
+    elif shape == "mixed":
+        store.append("t", first, day_col="bucket_ts")
+        store.append("t", later)
+        store.overwrite_range(
+            "t", _typed(spark, [("z", 2)]), "bucket_ts", *day2, day_col="bucket_ts"
+        )
+
+
+@pytest.mark.parametrize(
+    "shape",
+    ["append", "partitioned_append", "overwrite_range", "delete_below", "compacted", "mixed"],
+)
+def test_read_with_manifest_schema_equals_inferred(spark, store, shape, monkeypatch):
+    """Every commit shape reads back, with the schema its manifest
+    records, the schema and rows that schema inference gives the same
+    chain."""
+    _commit_shape(spark, store, shape)
+    got = store.read("t")
+    schema, rows = got.schema, sorted(got.collect(), key=lambda r: r.key)
+    with monkeypatch.context() as mp:
+        mp.setattr(DataFrameReader, "schema", lambda reader, _schema: reader)
+        inferred = store.read("t")
+        want_schema, want_rows = inferred.schema, sorted(inferred.collect(), key=lambda r: r.key)
+    assert schema == want_schema
+    assert rows == want_rows and rows
+
+
+def test_read_without_manifest_schema_raises(spark, store):
+    snap = store.append("t", _pts(spark, [("a", 1, 0, 1.0)]))
+    path = store._manifest_path("t")
+    with open(path) as f:
+        m = json.load(f)
+    del m["snapshots"][0]["schema"]
+    with open(path, "w") as f:
+        json.dump(m, f)
+    with pytest.raises(ValueError, match=f"{snap}.*'t'"):
+        store.read("t")
+
+
+def test_two_writers_keep_every_snapshot(spark, store, monkeypatch):
+    """Two threads committing to one table both read the manifest before
+    either swaps it (the barrier holds each reader until the other has
+    read too, or gives up after 1 s when the lock keeps the other out);
+    every snapshot survives, in one parent chain."""
+    store.append("t", _pts(spark, [("a", 1, 0, 1.0)]))
+    read_manifest = store._manifest
+    both_read = threading.Barrier(2)
+
+    def read_then_wait(table):
+        m = read_manifest(table)
+        try:
+            both_read.wait(timeout=1)
+        except threading.BrokenBarrierError:
+            pass
+        return m
+
+    monkeypatch.setattr(store, "_manifest", read_then_wait)
+    frames = [_pts(spark, [(d, 2, 0, 2.0)]) for d in ("b", "c")]
+    writers = [threading.Thread(target=store.append, args=("t", df)) for df in frames]
+    for w in writers:
+        w.start()
+    for w in writers:
+        w.join(timeout=120)
+        assert not w.is_alive()
+    monkeypatch.undo()
+
+    snaps = store.snapshots("t")
+    assert len(snaps) == 3
+    assert [e["parent"] for e in snaps] == [None] + [e["snapshot_id"] for e in snaps[:-1]]
+    assert store.current_snapshot("t") == snaps[-1]["snapshot_id"]
+    assert sorted(r.domain for r in store.read("t").collect()) == ["a", "b", "c"]
+
+
+def test_concurrent_set_meta_loses_no_key(store):
+    """More writer threads than cores, each adding its own keys through
+    the manifest read-modify-write with a short switch interval: no
+    update is lost."""
+    def write(i):
+        for j in range(10):
+            store.set_meta("t", **{f"k{i}_{j}": j})
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        writers = [threading.Thread(target=write, args=(i,)) for i in range(8)]
+        for w in writers:
+            w.start()
+        for w in writers:
+            w.join(timeout=60)
+            assert not w.is_alive()
+    finally:
+        sys.setswitchinterval(old)
+    assert store.meta("t") == {f"k{i}_{j}": j for i in range(8) for j in range(10)}
